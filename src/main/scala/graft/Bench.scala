@@ -23,32 +23,14 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Sub-second interactive queries at bench scale don't benefit from
-      // runtime re-planning; AQE's per-stage materialization barriers cost
-      // ~12% aggregate here. Cluster deployments re-enable it for skew
-      // handling and partition coalescing (Verify runs with it on, so
-      // correctness is covered under both configurations).
-      .config("spark.sql.adaptive.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Sub-second interactive queries at bench scale don't benefit from
+    // runtime re-planning; AQE's per-stage materialization barriers cost
+    // ~12% aggregate here. Cluster deployments re-enable it for skew
+    // handling and partition coalescing (Verify runs with it on, so
+    // correctness is covered under both configurations).
+    val spark = Sessions.local("graft-bench", aqe = false)
     SparkEntry.registerSessionFunctions(spark)
-
-    // Shuffle partitions sized to the data, not the core count: with AQE
-    // off, a shuffle stage otherwise schedules `cpus` tasks for kilobyte
-    // partitions and task overhead dominates the sub-second long tail.
-    // ~75k fact rows per partition, clamped to [4, 2*cpus]; scans still
-    // parallelize across all cores via input splits. Override with
-    // SPARK_GRAFT_SHUFFLE.
-    val factRows = spark.read.parquet(s"$sfDir/lineitem.parquet").count()
-    val shuffle = sys.env.get("SPARK_GRAFT_SHUFFLE").map(_.toInt).getOrElse(
-      math.max(4, math.min(cpus.toInt * 2, (factRows / 75000L).toInt + 1)))
-    spark.conf.set("spark.sql.shuffle.partitions", shuffle)
+    Sessions.sizeShuffleToFacts(spark, sfDir)
 
     // Dev-only filter for iterating on individual queries; the driver
     // never sets it, so per-round benches always run the full set.

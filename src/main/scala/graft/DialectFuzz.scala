@@ -1323,15 +1323,7 @@ object DialectFuzz {
     // Optional family filter (comma-separated) for reproducing one
     // family's statements in isolation — the full run stays the gate.
     val famFilter = args.lift(3).map(_.split(',').toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel(
-      sys.env.getOrElse("SPARK_GRAFT_LOG_LEVEL", "WARN"))
+    val spark = Sessions.local("graft-dialect-fuzz", aqe = true)
     SparkEntry.registerSessionFunctions(spark)
     new java.io.File(outDir).mkdirs()
 

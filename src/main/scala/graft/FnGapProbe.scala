@@ -2,8 +2,6 @@ package graft
 
 import scala.io.Source
 
-import org.apache.spark.sql.SparkSession
-
 import graft.fixtures.FixtureCorpus
 import graft.fm.{QueryEngine, Settings}
 
@@ -27,14 +25,8 @@ object FnGapProbe {
     val utf8Out = new java.io.PrintStream(java.lang.System.out, true, "UTF-8")
     java.lang.System.setOut(utf8Out)
     val exprFile = args(0)
-    val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .appName("graft-fn-gap-probe").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val sfDir = if (args.length > 1) args(1) else SparkEntry.SmokeSfDir
+    val spark = Sessions.local("graft-fn-gap-probe", aqe = true)
     SparkEntry.registerSessionFunctions(spark)
     val base = FixtureCorpus.ensure(spark, sfDir)
     val engine = new QueryEngine(

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Writes PLANS.md: the formatted physical plan of each audited query
   * plus extracted scale evidence — parquet filter pushdown, pruned read
   * schemas, broadcast joins, whole-stage-codegen coverage. Run after plan
@@ -244,28 +242,23 @@ object PlanAudit {
       "end, incl. q_fm_win_exclude_range's declared a_cur frame):\n" +
       "graft.WindowFrameProbe times the direct frame at 1.14/11.9/201.8 s for\n" +
       "partition widths 5k/20k/80k (O(width²) confirmed) against 0.1–0.2 s for\n" +
-      "both O(rows) alternatives — which diverge from the direct frame's bit\n" +
-      "pattern on ~98% of rows, the parity the 4440-case fuzz pins. No exact\n" +
+      "both O(rows) alternatives — which diverge from the direct frame. At\n" +
+      "width 5k (8 partitions, 40,000 rows) the subtractive spelling drifts\n" +
+      "off its bit pattern on 39,009 rows and is non-NULL where it is NULL on\n" +
+      "8 (each partition's last row); the inverted one drifts on 38,886 and\n" +
+      "has 0 NULL-vs-value rows — the parity the 4440-case fuzz pins. No exact\n" +
       "O(rows) recombination exists for left-fold suffix semantics; cost is\n" +
       "bounded by window partition width, not corpus size — a floor with\n" +
       "numbers, not prose."))
 
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
+    val sfDir = args.headOption.getOrElse(SparkEntry.SmokeSfDir)
     val out = args.lift(1).getOrElse("PLANS.md")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Audit the bench configuration: with AQE on, an unexecuted
-      // formatted explain prints a non-final AdaptiveSparkPlan with no
-      // `[codegen id : N]` annotations, so span counts would read 0
-      // regardless of actual codegen coverage.
-      .config("spark.sql.adaptive.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // Audit the bench configuration: with AQE on, an unexecuted
+    // formatted explain prints a non-final AdaptiveSparkPlan with no
+    // `[codegen id : N]` annotations, so span counts would read 0
+    // regardless of actual codegen coverage.
+    val spark = Sessions.local("graft-plan-audit", aqe = false)
 
     val sb = new StringBuilder
     sb ++= s"# PLANS — physical-plan audit (generated by graft.PlanAudit at $sfDir)\n\n"

@@ -571,24 +571,16 @@ object ScaleProbe {
         case _ => targets
       }
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // AQE ON: the probe is about cluster behavior (skew handling,
-      // partition coalescing, runtime join re-planning) — the exact
-      // configuration Verify runs with and a cluster deployment uses.
-      .config("spark.sql.adaptive.enabled", "true")
-      // One session spans three orders of magnitude of data: let AQE
-      // pick per-stage partition counts by starting shuffles wide and
-      // coalescing down (a fixed 32 at 100× makes ~GB partitions that
-      // spill; a cluster deployment sets exactly this knob)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INIT_PARTS", "256"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // AQE ON: the probe is about cluster behavior (skew handling,
+    // partition coalescing, runtime join re-planning) — the exact
+    // configuration Verify runs with and a cluster deployment uses.
+    // One session spans three orders of magnitude of data: let AQE
+    // pick per-stage partition counts by starting shuffles wide and
+    // coalescing down (a fixed 32 at 100× makes ~GB partitions that
+    // spill; a cluster deployment sets exactly this knob)
+    val spark = Sessions.local("graft-scale-probe", aqe = true, overrides = Map(
+      "spark.sql.adaptive.coalescePartitions.initialPartitionNum" ->
+        sys.env.getOrElse("SPARK_GRAFT_INIT_PARTS", "256")))
     SparkEntry.registerSessionFunctions(spark)
 
     // JVM warm-up on a DIFFERENT dir (sf0.01): absorbs codegen, class

@@ -2,11 +2,13 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session profiles encoding how this library expects to be deployed —
-  * the scale configuration as code rather than tribal knowledge. The
-  * query catalog itself never assumes a profile (every operator is
-  * tested under both AQE settings: Verify runs adaptive, Bench runs
-  * static), but a user standing up the engine should start from these.
+/** The one place a session is built. Every main (Verify, Bench, Probe,
+  * PlanAudit, DialectFuzz, FnGapProbe, ScaleProbe, WindowFrameProbe, the
+  * MCP server) and the test session start from [[local]], so the probe,
+  * bench and serving configurations differ only in what each caller
+  * passes beside the call. The query catalog itself never assumes a
+  * profile (every operator is tested under both AQE settings: Verify
+  * runs adaptive, Bench runs static).
   */
 object Sessions {
 
@@ -41,23 +43,43 @@ object Sessions {
     "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "128m",
     "spark.sql.files.maxPartitionBytes" -> "256m")
 
-  /** Local profile: the interactive / test shape this repo runs under —
-    * core-count parallelism, shuffle partitions at the core count (the
-    * data at local scale never needs more), UTC for the oracles.
+  /** Local parallelism: `SPARK_GRAFT_CPUS`, else the cores this JVM sees. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  /** Local profile: `local[cpus]`, shuffle partitions at the core count
+    * (the data at local scale never needs more), UTC for the oracles, no
+    * UI, and AQE as the caller says. AQE is a build-time setting so it
+    * also reaches `newSession()` clones such as `QueryEngine`'s private
+    * session. `overrides` replace or extend these settings; logging is
+    * set to WARN.
     */
-  def localConf(cores: Int): Map[String, String] = Map(
-    "spark.sql.shuffle.partitions" -> cores.toString,
-    "spark.sql.session.timeZone" -> "UTC",
-    "spark.ui.enabled" -> "false")
-
-  def clusterBuilder(appName: String): SparkSession.Builder =
-    ClusterConf.foldLeft(SparkSession.builder().appName(appName)) {
+  def local(appName: String, aqe: Boolean,
+      overrides: Map[String, String] = Map.empty): SparkSession = {
+    val conf = Map(
+      "spark.master" -> s"local[$cpus]",
+      "spark.sql.shuffle.partitions" -> cpus.toString,
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.ui.enabled" -> "false",
+      "spark.sql.adaptive.enabled" -> aqe.toString) ++ overrides
+    val spark = conf.foldLeft(SparkSession.builder().appName(appName)) {
       case (b, (k, v)) => b.config(k, v)
-    }
+    }.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 
-  def localBuilder(appName: String, cores: Int): SparkSession.Builder =
-    localConf(cores).foldLeft(
-      SparkSession.builder().appName(appName).master(s"local[$cores]")) {
-      case (b, (k, v)) => b.config(k, v)
-    }
+  /** Bench profile's shuffle sizing, shared by Bench and Probe: partitions
+    * sized to the data, not the core count. With AQE off a shuffle stage
+    * otherwise schedules `cpus` tasks for kilobyte partitions and task
+    * overhead dominates the sub-second long tail. ~75k fact rows per
+    * partition, clamped to [4, 2*cpus]; scans still parallelize across
+    * all cores via input splits. `SPARK_GRAFT_SHUFFLE` overrides.
+    */
+  def sizeShuffleToFacts(spark: SparkSession, sfDir: String): Unit = {
+    val factRows = spark.read.parquet(s"$sfDir/lineitem.parquet").count()
+    val shuffle = sys.env.get("SPARK_GRAFT_SHUFFLE").map(_.toInt).getOrElse(
+      math.max(4, math.min(cpus * 2, (factRows / 75000L).toInt + 1)))
+    spark.conf.set("spark.sql.shuffle.partitions", shuffle)
+  }
 }

@@ -23,13 +23,18 @@ object SparkEntry {
     graft.ops.GraftAggregates.register(spark)
   }
 
-  /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
+  /** The smallest scale-factor dir: the flagship smoke check's input and
+    * the default for the dev mains that build the fixture corpus from it.
+    */
+  val SmokeSfDir = "/root/testdata/sf0.001"
+
+  /** Flagship query on [[SmokeSfDir]]; driver smoke-checks rows>0.
     * The product's core path: markdown corpus → frontmatter parse →
     * `files` view → the README's flagship date-filter SQL through
     * `QueryEngine.query` (README.md:101).
     */
   def entry(spark: SparkSession): DataFrame =
-    queries("q_fm_flagship")(spark, "/root/testdata/sf0.001")
+    queries("q_fm_flagship")(spark, SmokeSfDir)
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =

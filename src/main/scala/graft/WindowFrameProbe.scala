@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Quantifies the one quadratic window shape the dialect rewrites
@@ -29,15 +28,7 @@ object WindowFrameProbe {
     val widths = args.lift(0).getOrElse("5000,20000,80000")
       .split(',').map(_.trim.toInt).toSeq
     val nPart = args.lift(1).map(_.toInt).getOrElse(8)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-window-frame-probe", aqe = false)
 
     for (w <- widths) {
       // nPart window partitions of `w` rows each; DOUBLE values with
@@ -72,19 +63,24 @@ object WindowFrameProbe {
       // bit-parity of the alternatives against the direct frame
       def col2(e: String) = df.selectExpr("p", "k", s"$e AS s")
       val dir = col2(s"sum(x) OVER ($over ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING)")
-      def mismatches(e: String): Long =
-        dir.as("a").join(col2(e).as("b"), Seq("p", "k"))
-          .filter("NOT (a.s <=> b.s) OR " +
-            "(a.s IS NOT NULL AND CAST(a.s AS STRING) <> CAST(b.s AS STRING))")
-          .count()
+      // Two kinds of mismatch, counted apart: NULL on exactly one side
+      // (each partition's last row, where the direct frame is empty but
+      // the subtractive spelling yields total - total), and bit-pattern
+      // drift between two non-NULL sums.
+      def mismatches(e: String): String = {
+        val r = dir.as("a").join(col2(e).as("b"), Seq("p", "k")).selectExpr(
+          "count_if((a.s IS NULL) <> (b.s IS NULL))",
+          "count_if(CAST(a.s AS STRING) <> CAST(b.s AS STRING))").head()
+        s"null-vs-value=${r.getLong(0)} bit-drift=${r.getLong(1)}"
+      }
       val mSub = mismatches(
         s"(sum(x) OVER ($over ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) - " +
           s"sum(x) OVER ($over ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))")
       val mInv = mismatches(
         s"sum(x) OVER (PARTITION BY p ORDER BY k DESC NULLS LAST " +
           "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)")
-      println(s"[wfp] width=$w ulp-mismatch rows: subtractive=$mSub inverted=$mInv " +
-        s"of ${w.toLong * nPart}")
+      println(s"[wfp] width=$w mismatch rows of ${w.toLong * nPart}: " +
+        s"subtractive $mSub; inverted $mInv")
       val perRowNs = direct / (w.toLong * nPart) * 1e9
       println(f"[wfp] width=$w direct per-row cost $perRowNs%.0f ns (quadratic: ~width x add)")
       df.unpersist()

@@ -349,21 +349,22 @@ object McpServer {
         "required" -> required))
   }
 
+  /** The serving session: the [[graft.Sessions.local]] profile with AQE
+    * on, on `SPARK_MASTER` (default `local[*]`) and 8 shuffle partitions
+    * unless `SPARK_GRAFT_SHUFFLE` says otherwise.
+    */
+  private[graft] def session(): SparkSession =
+    graft.Sessions.local("frontmatter-spark-mcp", aqe = true, overrides = Map(
+      "spark.master" -> sys.env.getOrElse("SPARK_MASTER", "local[*]"),
+      "spark.sql.shuffle.partitions" -> sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "8")))
+
   /** Stdio entry point, mirroring the reference's `main()`
     * (`server.py:663-675`): settings from the same env vars, kick off
     * indexing at boot when semantic is enabled, then serve stdin.
     * Spark logs go to stderr; stdout carries only protocol lines.
     */
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("frontmatter-spark-mcp")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
     val tools = new FmTools(spark, Settings.fromEnv())
     tools.startup()
     new McpServer(tools).serve(System.in, System.out)

@@ -43,7 +43,8 @@ object PageRank {
   /** Run `iterations` damped rank updates (d = 0.85) over `(src, dst)`
     * edges; returns `(node, pr)` with `pr` on the integer grid. The
     * returned frame is already materialized (checkpointed) — callers
-    * pay only their own final transformations on top.
+    * pay only their own final transformations on top. An empty edge
+    * frame yields an empty `(node, pr)` frame.
     */
   def run(edges: DataFrame, iterations: Int): DataFrame = {
     require(iterations >= 1, "need at least one iteration")
@@ -61,6 +62,11 @@ object PageRank {
     // to the SQL `DIV` the oracle replays.
     val nodes = e.select(col("src").as("node")).distinct().persist()
     val n = nodes.count()
+    if (n == 0) { // empty graph: no ranks to compute, and no Scale / 0
+      withDeg.unpersist(blocking = false)
+      nodes.unpersist(blocking = false)
+      return nodes.select(col("node"), lit(0L).as("pr")).limit(0)
+    }
     val base = Scale / n
     var ranks = nodes.select(col("node"), lit(base).as("pr"))
     var prevCut: Option[org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]] = None

@@ -4,13 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local("graft-test", aqe = true, overrides = Map(
+    "spark.master" -> "local[4]", "spark.sql.shuffle.partitions" -> "4"))
 }
 
 class RelationalSpec extends AnyFunSuite {

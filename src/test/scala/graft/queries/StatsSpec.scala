@@ -118,6 +118,10 @@ class StatsSpec extends AnyFunSuite {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(sr(0L) > sr(1L), "hub must outrank a leaf")
     assert(sr(1L) == sr(2L) && sr(2L) == sr(3L), "leaves are symmetric")
+    // empty graph: an empty (node, pr) frame, not a divide-by-zero
+    val none = graft.ops.PageRank.run(Seq.empty[(Long, Long)].toDF("src", "dst"), 4)
+    assert(none.columns.toSeq == Seq("node", "pr"))
+    assert(none.collect().isEmpty)
   }
 
   test("q_session_funnel stage timestamps are strictly ordered") {

@@ -41,7 +41,7 @@ LEFT = {
     "q_winnow_crossdup": "collapse-first, df-pruned, hb-gated; cost = codegen winnow kernel + bounded joins; high run-spread is GC noise",
     "q_fm_mutations": "driver file rewrite + mtime invalidation IS the reference contract",
     "q_fm_mutations_dist": "distributed rewrite path; same contract",
-    "q_fm_win_exclude_range": "a_cur's DECLARED frame (RANGE CR..UF) is the quadratic one; r18 WindowFrameProbe: O(rows) alternatives are up to 1200x faster AND move the last ulp on ~98% of rows — the parity the fuzz pins; floor, now with numbers",
+    "q_fm_win_exclude_range": "a_cur's DECLARED frame (RANGE CR..UF) is the quadratic one; r18 WindowFrameProbe: O(rows) alternatives are up to 1200x faster AND move the last ulp on ~97% of rows (width 5k: 39,009 and 38,886 of 40,000; NULL-vs-value only on the 8 partition-last rows) — the parity the fuzz pins; floor, now with numbers",
     "q_session_funnel": "4 sequential stage gates are the funnel definition; co-partitioned on user_id throughout",
     "q_cohort_retention": "distinct + join + count-distinct, co-partitioned on user_id; floor",
     "q_range_join": "bucketed grid equi-join; SMJ kept for spill robustness under skewed time buckets (generic operator)",

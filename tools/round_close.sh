@@ -12,11 +12,20 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 round="${1:-}"
-git add -A -- \
+# Stage only the artifacts that exist and are not gitignored: one
+# pathspec matching nothing (COPYCHECK.json is gitignored and normally
+# absent) makes `git add` fail and stage nothing. Git's own errors are
+# left to stop the script.
+shopt -s nullglob
+present=()
+for f in \
   BENCH_r*.json CORRECTNESS_r*.json PERF_r*.json VERIFY_r*.json \
   BENCH_FULL.json BENCH_FULL.meta.json LEAKCHECK.json COPYCHECK.json \
   SCALE_PROBE.json DUCKDB_BASELINE.json CORRECTNESS_RETAIN.json \
-  VERDICT.md ADVICE.md 2>/dev/null || true
+  VERDICT.md ADVICE.md; do
+  if [[ -e $f ]] && ! git check-ignore -q -- "$f"; then present+=("$f"); fi
+done
+if (( ${#present[@]} )); then git add -A -- "${present[@]}"; fi
 if git diff --cached --quiet; then
   echo "[round_close] nothing to commit"
 else
