@@ -5282,7 +5282,7 @@ object Dialect {
     * `stack` lateral view pivots the single stats row into N output
     * rows — the scan count stays 1 however wide the table is, and the
     * stack input is one row, so at 100 TB this costs exactly one
-    * scan + a width-bounded aggregate (the same shape SchemaInfer uses).
+    * scan + a width-bounded aggregate (the shape of Corpus.filesDF's summary).
     * `schema` supplies (name, Spark SQL type) pairs — the engine passes
     * the resolved files view schema, the same provider pattern as
     * COLUMNS/PIVOT.

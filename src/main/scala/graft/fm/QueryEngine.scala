@@ -12,6 +12,10 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 trait SemanticProvider {
   def isReady: Boolean
   def dim: Int
+  /** Changes whenever the embedding snapshot does: a `files` frame joined
+    * under another generation holds stale embeddings.
+    */
+  def snapshotGeneration: Long
   /** Left-join the embedding column onto `files` by `path`. */
   def withEmbedding(files: DataFrame): DataFrame
   /** Register `embed(text)` and the cosine functions on the session. */
@@ -45,8 +49,9 @@ final case class QueryResult(
   * The parsed DataFrame is persisted and keyed by a corpus fingerprint of
   * (path, mtime) pairs — the Spark-shaped equivalent of the reference's
   * mtime parse cache (`files.py:19-49`): any file change alters the
-  * fingerprint and triggers a re-parse; an unchanged corpus reuses the
-  * in-memory table across queries.
+  * fingerprint and triggers a re-parse (one Spark job, see
+  * [[Corpus.filesDF]]); an unchanged corpus reuses the in-memory table
+  * and its [[CorpusSummary]] across queries and inspects.
   */
 final class QueryEngine(
     val spark: SparkSession,
@@ -87,49 +92,48 @@ final class QueryEngine(
   private val bridgeView: String =
     "graft_files_" + java.util.UUID.randomUUID().toString.replace("-", "")
 
+  /** One glob's corpus: the persisted parse, the all-strings frame built
+    * on it, its summary, and the served `files` frame — `base` joined with
+    * the embedding snapshot of generation `semanticAt` (None: semantic
+    * off or not ready, `files` is `base`).
+    */
   private case class Cached(
       fingerprint: String,
       parsed: Dataset[ParsedFile],
+      base: DataFrame,
+      summary: CorpusSummary,
       files: DataFrame,
-      warnings: Seq[ParseWarning],
-      semanticApplied: Boolean)
+      semanticAt: Option[Long])
 
   private val cache = TrieMap.empty[String, Cached]
-
-  private def semanticReady: Boolean = semantic.exists(_.isReady)
 
   /** The `files` DataFrame for a glob, fingerprint-cached. */
   def filesTable(glob: String): (DataFrame, Seq[ParseWarning]) = {
     val entry = cachedParse(glob)
-    (entry.files, entry.warnings)
+    (entry.files, entry.summary.warnings)
   }
+
+  private def served(base: DataFrame, semanticAt: Option[Long]): DataFrame =
+    (if (semanticAt.isDefined) semantic.get.withEmbedding(base) else base).persist()
 
   private def cachedParse(glob: String): Cached = synchronized {
     val pm = FileScan.collectWithMtime(settings.baseDir, glob)
     val fp = Corpus.fingerprint(pm)
-    val wantSemantic = semanticReady
+    val semanticAt = semantic.filter(_.isReady).map(_.snapshotGeneration)
+    def keep(entry: Cached): Cached = { cache.put(glob, entry); entry }
     cache.get(glob) match {
-      case Some(c) if c.fingerprint == fp && c.semanticApplied == wantSemantic => c
+      case Some(c) if c.fingerprint == fp && c.semanticAt == semanticAt => c
       case Some(c) if c.fingerprint == fp =>
-        // Corpus unchanged, only semantic readiness flipped: reuse the
-        // persisted parsed Dataset and rebuild just the files frame with
-        // (or without) the embedding join — no re-read, no re-parse.
+        // Corpus unchanged, only the embedding snapshot moved (readiness
+        // flipped or a refresh flushed): re-join the persisted base — no
+        // re-read, no re-parse, no Spark job.
         c.files.unpersist()
-        val (base, warnings) = Corpus.filesDF(spark, c.parsed)
-        val files =
-          (if (wantSemantic) semantic.get.withEmbedding(base) else base).persist()
-        val entry = Cached(fp, c.parsed, files, warnings, wantSemantic)
-        cache.put(glob, entry)
-        entry
+        keep(c.copy(files = served(c.base, semanticAt), semanticAt = semanticAt))
       case stale =>
         stale.foreach { c => c.files.unpersist(); c.parsed.unpersist() }
         val parsed = Corpus.parse(spark, settings.baseDir.toString, pm.map(_._1)).persist()
-        val (base, warnings) = Corpus.filesDF(spark, parsed)
-        val files =
-          (if (wantSemantic) semantic.get.withEmbedding(base) else base).persist()
-        val entry = Cached(fp, parsed, files, warnings, wantSemantic)
-        cache.put(glob, entry)
-        entry
+        val (base, summary) = Corpus.filesDF(spark, parsed)
+        keep(Cached(fp, parsed, base, summary, served(base, semanticAt), semanticAt))
     }
   }
 
@@ -147,7 +151,7 @@ final class QueryEngine(
 
   def query(glob: String, sql: String): QueryResult = {
     val entry = cachedParse(glob)
-    val (files, warnings) = (entry.files, entry.warnings)
+    val (files, warnings) = (entry.files, entry.summary.warnings)
     val fp = entry.fingerprint
     // Multi-statement scripts: every statement but the last must be a
     // CREATE MACRO (recorded, connection-scoped like DuckDB's); the last
@@ -713,37 +717,17 @@ final class QueryEngine(
     }
   }
 
-  private val inspectCache =
-    TrieMap.empty[String, (String, Long, DataFrame)]
-
-  /** `query_inspect` tool: inferred schema rows + file count.
-    * Appends the `embedding FLOAT[dim]` row when semantic is ready
-    * (reference `semantic/query_schema.py:7-18`). The tiny result frame
-    * is cached by corpus fingerprint — repeated inspects of an unchanged
-    * corpus don't re-aggregate.
+  /** `query_inspect` tool: inferred schema rows + file count, built
+    * locally from the cached corpus summary — no Spark job.
+    * Appends the `embedding FLOAT[dim]` row when the served frame carries
+    * embeddings (reference `semantic/query_schema.py:7-18`).
     */
   def inspect(glob: String): (Long, DataFrame, Seq[ParseWarning]) = {
-    import org.apache.spark.sql.functions.lit
     val entry = cachedParse(glob)
-    val (fileCount, base) = inspectCache.get(glob) match {
-      case Some((fp, n, df)) if fp == entry.fingerprint => (n, df)
-      case _ =>
-        val n = entry.parsed.filter(_.ok).count()
-        val rows = SchemaInfer.inspectFlat(spark, entry.parsed)
-        val materialized = spark.createDataFrame(
-          java.util.Arrays.asList(rows.collect(): _*), rows.schema)
-        inspectCache.put(glob, (entry.fingerprint, n, materialized))
-        (n, materialized)
-    }
-    val withSem = semantic.filter(_.isReady) match {
-      case Some(p) =>
-        val row = spark.createDataFrame(
-          java.util.List.of(
-            org.apache.spark.sql.Row("embedding", s"FLOAT[${p.dim}]", false, "[]")),
-          base.schema)
-        base.union(row)
-      case None => base
-    }
-    (fileCount, withSem, entry.warnings)
+    val embedding = for (_ <- entry.semanticAt; p <- semantic)
+      yield org.apache.spark.sql.Row("embedding", s"FLOAT[${p.dim}]", false, "[]")
+    (entry.summary.okFiles,
+      SchemaInfer.inspectFlat(spark, entry.summary, embedding.toSeq),
+      entry.summary.warnings)
   }
 }

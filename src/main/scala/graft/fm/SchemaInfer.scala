@@ -1,73 +1,39 @@
 package graft.fm
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{BooleanType, StringType, StructField, StructType}
 
 /** `query_inspect` schema inference (reference `query_schema.py:19-69`):
   * per property `{type, nullable, examples}` where type is "array" iff any
   * non-null value is a YAML list, nullable means some matched file lacks a
   * non-null value (`path` hard-wired non-null), and examples are the first
-  * `maxSamples` distinct values in record order.
+  * [[Corpus.MaxExamples]] distinct values in record (path) order.
   *
-  * Implemented as a distributed aggregation, not a driver fold: per-key
-  * counts are a hash aggregate, and first-seen examples are
-  * groupBy(key,value)→min(path) followed by a bounded top-k aggregator —
-  * both partial-aggregate friendly, no per-key sort (record order is path
-  * order because [[FileScan.collect]] sorts).
+  * The per-key facts come from the [[CorpusSummary]] the ingest job
+  * already collected (see [[Corpus.filesDF]]), so building the rows is a
+  * local step over one entry per key and runs no Spark job.
   */
 object SchemaInfer {
 
-  /** Rows: (property, type, nullable, examples) with examples rendered as
-    * a JSON array string of the serialized values.
+  private val schema: StructType = StructType(Seq(
+    StructField("property", StringType),
+    StructField("type", StringType),
+    StructField("nullable", BooleanType),
+    StructField("examples", StringType)))
+
+  /** Rows (property, type, nullable, examples) sorted by property, the
+    * examples rendered as one JSON array string — a stable,
+    * oracle-comparable shape for Verify — followed by `extra` rows.
     */
-  def inspect(spark: SparkSession, parsed: Dataset[ParsedFile], maxSamples: Int = 5): DataFrame = {
-    import spark.implicits._
-    val good = parsed.filter(_.ok)
-    val totalFiles = good.count()
-    val kv = good
-      .flatMap(pf => pf.fields.map(f => (f.key, f.value, f.isArray, pf.path)))
-      .toDF("key", "value", "is_array", "path")
-      .cache()
-
-    val stats = kv
-      .groupBy("key")
-      .agg(
-        count(col("value")).as("cnt"), // count() skips NULLs, like the reference's non_null filter
-        max(when(col("value").isNotNull && col("is_array"), 1).otherwise(0)).as("arr"))
-
-    // First occurrence path per distinct (key, value); then first-5 by path.
-    graft.ops.GraftAggregates.register(spark)
-    val examples = kv
-      .filter(col("value").isNotNull)
-      .groupBy("key", "value")
-      .agg(min("path").as("fp"))
-      .groupBy("key")
-      .agg(expr(s"graft_top_k(struct(fp, value), $maxSamples)").as("ex"))
-      .select(col("key"), col("ex.value").as("examples"))
-
-    val out = stats
-      .join(examples, Seq("key"), "left")
-      .select(
-        col("key").as("property"),
-        when(col("arr") === 1, "array").otherwise("string").as("type"),
-        when(col("key") === "path", false)
-          .otherwise(col("cnt") < totalFiles)
-          .as("nullable"),
-        col("examples"))
-    kv.unpersist()
-    out
-  }
-
-  /** Same, with examples rendered as one JSON string column — a stable,
-    * oracle-comparable shape for Verify.
-    */
-  def inspectFlat(spark: SparkSession, parsed: Dataset[ParsedFile], maxSamples: Int = 5): DataFrame = {
-    val jsonQuote = udf { (xs: Seq[String]) =>
-      if (xs == null) "[]"
-      else xs.map(PyValue.jsonDumps(_)).mkString("[", ", ", "]")
+  def inspectFlat(spark: SparkSession, summary: CorpusSummary, extra: Seq[Row] = Nil): DataFrame = {
+    val rows = summary.keys.toSeq.sortBy(_._1).map { case (key, s) =>
+      Row(key,
+        if (s.anyArray) "array" else "string",
+        key != "path" && s.nonNull < summary.okFiles,
+        s.examples.map(e => PyValue.jsonDumps(e._2)).mkString("[", ", ", "]"))
     }
-    inspect(spark, parsed, maxSamples)
-      .withColumn("examples", jsonQuote(col("examples")))
+    spark.createDataFrame((rows ++ extra).asJava, schema)
   }
 }

@@ -22,6 +22,15 @@ final class EmbeddingCache(spark: SparkSession, cacheDir: Path, val model: Strin
   private val dataDir = cacheDir.resolve("embeddings.parquet")
   private val metaFile = cacheDir.resolve("metadata.json")
   private val entries = TrieMap.empty[String, (Long, Array[Float])]
+  @volatile private var flushes = 0L
+
+  /** The snapshot's schema, also given to its readers: without one,
+    * `spark.read.parquet` runs a schema-inference job per read.
+    */
+  private val snapshotSchema = StructType(Seq(
+    StructField("path", StringType, nullable = false),
+    StructField("mtime", LongType, nullable = false),
+    StructField("embedding", ArrayType(FloatType, containsNull = false), nullable = false)))
 
   locally {
     Files.createDirectories(cacheDir)
@@ -31,7 +40,7 @@ final class EmbeddingCache(spark: SparkSession, cacheDir: Path, val model: Strin
       deleteSnapshot()
       entries.clear()
     } else if (Files.exists(dataDir)) {
-      spark.read.parquet(dataDir.toString).collect().foreach { r =>
+      readSnapshot().collect().foreach { r =>
         entries.put(r.getString(0), (r.getLong(1), r.getSeq[Float](2).toArray))
       }
     }
@@ -73,6 +82,11 @@ final class EmbeddingCache(spark: SparkSession, cacheDir: Path, val model: Strin
 
   def get(path: String): Option[Array[Float]] = entries.get(path).map(_._2)
 
+  /** Number of snapshots flushed by this instance; bumped after each swap. */
+  def generation: Long = flushes
+
+  private def readSnapshot(): DataFrame = spark.read.schema(snapshotSchema).parquet(dataDir.toString)
+
   /** Write the snapshot parquet. The swap is rename-based (old dir moved
     * aside, new dir moved in, old deleted last) so the unavailable window
     * is two renames, not a full delete+copy — in-flight queries planned
@@ -80,13 +94,9 @@ final class EmbeddingCache(spark: SparkSession, cacheDir: Path, val model: Strin
     * retry onto the new ones, never onto a half-deleted directory.
     */
   def flush(): Unit = {
-    val schema = StructType(Seq(
-      StructField("path", StringType, nullable = false),
-      StructField("mtime", LongType, nullable = false),
-      StructField("embedding", ArrayType(FloatType, containsNull = false), nullable = false)))
     val rows = entries.toSeq.sortBy(_._1).map { case (p, (m, v)) => Row(p, m, v.toSeq) }
     val df = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 1), schema)
+      spark.sparkContext.parallelize(rows, 1), snapshotSchema)
     val tmp = cacheDir.resolve("embeddings.parquet.tmp")
     df.write.mode("overwrite").parquet(tmp.toString)
     val old = cacheDir.resolve("embeddings.parquet.old")
@@ -94,6 +104,7 @@ final class EmbeddingCache(spark: SparkSession, cacheDir: Path, val model: Strin
     if (Files.exists(dataDir)) Files.move(dataDir, old)
     Files.move(tmp, dataDir)
     deleteTree(old)
+    flushes += 1
   }
 
   private def deleteTree(p: java.nio.file.Path): Unit =
@@ -107,12 +118,7 @@ final class EmbeddingCache(spark: SparkSession, cacheDir: Path, val model: Strin
     * (reference's UPDATE…FROM at `semantic/query.py:60-65` ≙ a join).
     */
   def asDataFrame: DataFrame =
-    if (Files.exists(dataDir))
-      spark.read.parquet(dataDir.toString).select("path", "embedding")
-    else {
-      val schema = StructType(Seq(
-        StructField("path", StringType, nullable = false),
-        StructField("embedding", ArrayType(FloatType, containsNull = false))))
-      spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
-    }
+    (if (Files.exists(dataDir)) readSnapshot()
+     else spark.createDataFrame(java.util.Collections.emptyList[Row](), snapshotSchema))
+      .select("path", "embedding")
 }

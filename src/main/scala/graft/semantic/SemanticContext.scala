@@ -35,6 +35,8 @@ final class SemanticContext(
 
   override def isReady: Boolean = indexer.state == IndexerState.Ready
 
+  override def snapshotGeneration: Long = cache.generation
+
   override def withEmbedding(files: DataFrame): DataFrame =
     files.join(cache.asDataFrame, Seq("path"), "left")
 

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Path}
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{JobCount, TestSpark}
 
 /** Mirrors the reference's query-execution unit cases
   * (tests/test_query.py:31-218) end-to-end through the engine over a
@@ -22,6 +22,8 @@ class QueryEngineSpec extends AnyFunSuite {
     }
     dir
   }
+
+  private val badYaml = "---\n{ not: valid: yaml: [\n---\n"
 
   private def eng(dir: Path) =
     new QueryEngine(spark, Settings(dir.toString, enableSemantic = false, "", None))
@@ -92,21 +94,34 @@ class QueryEngineSpec extends AnyFunSuite {
   }
 
   test("parse-warning list is bounded above the cap with an exact remainder count") {
-    val bad = (0 until 5).map(i => f"bad$i%02d.md" -> "---\n{ not: valid: yaml: [\n---\n")
+    val bad = (0 until 5).map(i => f"bad$i%02d.md" -> badYaml)
     val dir = corpus((("good.md" -> "---\nok: 1\n---\n") +: bad): _*)
     val parsed = Corpus.parse(spark, dir.toString,
       FileScan.collect(dir, "**/*.md").map(_.toString).sorted)
     // Below the cap: full reference-parity list, no summary entry.
-    val (_, full) = Corpus.filesDF(spark, parsed, maxWarnings = 5)
+    val full = Corpus.filesDF(spark, parsed, maxWarnings = 5)._2.warnings
     assert(full.length == 5 && full.forall(_.path.startsWith("bad")))
     // Above the cap: first N plus one summary row with the exact remainder.
-    val (df, capped) = Corpus.filesDF(spark, parsed, maxWarnings = 2)
-    assert(capped.length == 3)
-    assert(capped.take(2).forall(_.path.startsWith("bad")))
-    assert(capped.last.path == "(truncated)")
+    val (df, summary) = Corpus.filesDF(spark, parsed, maxWarnings = 2)
+    val capped = summary.warnings
+    assert(capped.map(_.path) == Seq("bad00.md", "bad01.md", "(truncated)"))
     assert(capped.last.error.contains("3 more parse warnings"))
     // The data frame itself is unaffected by the warning cap.
     assert(df.count() == 1)
+
+    // Failures spread over several partitions, paths fed in reverse
+    // order: the listing is still the first `cap` by path (files.py:70-107
+    // lists in sorted path order) and the remainder count stays exact.
+    val many = (0 until 128).map(i =>
+      f"n$i%03d.md" -> (if (i % 3 == 1) badYaml else s"---\nk: $i\n---\n"))
+    val dir2 = corpus(many: _*)
+    val parsed2 = Corpus.parse(spark, dir2.toString,
+      FileScan.collect(dir2, "**/*.md").map(_.toString).sorted.reverse)
+    assert(parsed2.rdd.getNumPartitions > 1)
+    val failing = many.collect { case (p, c) if c == badYaml => p }
+    val listed = Corpus.filesDF(spark, parsed2, maxWarnings = 10)._2.warnings
+    assert(listed.init.map(_.path) == failing.take(10))
+    assert(listed.last.error.contains(s"... ${failing.length - 10} more parse warnings"))
   }
 
   test("response shape {results, row_count, columns} (server.py:160-169)") {
@@ -117,17 +132,29 @@ class QueryEngineSpec extends AnyFunSuite {
   }
 
   test("fingerprint cache: same corpus reuses the DataFrame; edit invalidates") {
-    val dir = corpus(threeDocs: _*)
+    // 96 notes, so the parse spans several partitions
+    val dir = corpus(threeDocs ++ (0 until 93).map(i =>
+      f"n$i%03d.md" -> s"---\nk: v${i % 7}\ntags: [a]\n---\nbody"): _*)
     val e = eng(dir)
     val df1 = e.filesTable("**/*.md")._1
-    val df2 = e.filesTable("**/*.md")._1
+    val (df2, unchangedJobs) = JobCount(spark)(e.filesTable("**/*.md")._1)
     assert(df1 eq df2)
-    // touch a file with a different mtime → new fingerprint
+    assert(unchangedJobs == 0)
+    // edit a file with a different mtime → new fingerprint, one ingest job
     val f = dir.resolve("a.md")
+    Files.write(f, "---\ntitle: Alpha\nnew_key: 1\n---\n".getBytes("UTF-8"))
     Files.setLastModifiedTime(f,
       java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() + 5000))
-    val df3 = e.filesTable("**/*.md")._1
+    val (df3, ingestJobs) = JobCount(spark)(e.filesTable("**/*.md")._1)
     assert(!(df1 eq df3))
+    assert(ingestJobs == 1)
+    // inspect answers from what the ingest job collected
+    val ((count, schema), inspectJobs) = JobCount(spark) {
+      val (n, df, _) = e.inspect("**/*.md")
+      (n, df.collect())
+    }
+    assert(inspectJobs == 0)
+    assert(count == 96 && schema.exists(_.getString(0) == "new_key"))
   }
 
   test("glob narrows the corpus (server.py:32-36)") {
@@ -155,6 +182,23 @@ class QueryEngineSpec extends AnyFunSuite {
     val (_, schemaDf, _) = e.inspect("**/*.md")
     val ex = schemaDf.collect().find(_.getString(0) == "k").get.getString(3)
     assert(ex == "[\"v1\", \"v2\", \"v3\", \"v4\", \"v5\"]")
+
+    // 128 files parse in 4 partitions of 32 (local[4]). `k` takes w9 on
+    // files 0-23, w8 on 24-47, … w4 on 120-127, and w9 again on every
+    // file ending in 7, so its first five distinct values span all four
+    // partitions, repeat, and sort against their path order. `gone` is
+    // always null; `mixed` is a list in partition 0 and a scalar in 3.
+    val many = (0 until 128).map { i =>
+      val k = if (i % 10 == 7) "w9" else s"w${9 - i / 24}"
+      val mixed = if (i == 5) "mixed:\n- a\n- b\n" else if (i == 100) "mixed: s\n" else ""
+      f"n$i%03d.md" -> s"---\nk: $k\ngone:\n$mixed---\n"
+    }
+    val (_, wide, _) = eng(corpus(many: _*)).inspect("**/*.md")
+    val byProp = wide.collect().map(r =>
+      r.getString(0) -> (r.getString(1), r.getBoolean(2), r.getString(3))).toMap
+    assert(byProp("k") == ("string", false, "[\"w9\", \"w8\", \"w7\", \"w6\", \"w5\"]"))
+    assert(byProp("gone") == ("string", true, "[]"))
+    assert(byProp("mixed") == ("array", true, "[\"[\\\"a\\\", \\\"b\\\"]\", \"s\"]"))
   }
 
   test("FileRecordCache mtime semantics (files.py:19-49)") {

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Path}
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{JobCount, TestSpark}
 import graft.fm.{QueryEngine, Settings}
 
 /** Mirrors the reference's semantic-layer tests: cache CRUD + model-change
@@ -238,16 +238,26 @@ class SemanticSpec extends AnyFunSuite {
     val ctx = new SemanticContext(spark, st, dimOverride = 32)
     ctx.indexer.start(); ctx.indexer.await(60000)
     val eng = new QueryEngine(spark, st, Some(ctx))
-    val r = eng.query("**/*.md",
+    def ranked(e: QueryEngine): Seq[String] = e.query("**/*.md",
       """SELECT path, array_cosine_similarity(embedding, embed('spark table scan')) AS score
         |FROM files WHERE embedding IS NOT NULL ORDER BY score DESC""".stripMargin)
-    val rows = r.results.collect()
-    assert(rows.map(_.getString(0)).toSeq == Seq("x.md", "y.md")) // x ranks first
+      .results.collect().map(_.getString(0)).toSeq
+    assert(ranked(eng) == Seq("x.md", "y.md")) // x ranks first
     val nulls = eng.query("**/*.md", "SELECT path FROM files WHERE embedding IS NULL")
     assert(nulls.results.collect().map(_.getString(0)).toSeq == Seq("z.md"))
     // inspect() gains the embedding row (semantic/query_schema.py:7-18)
     val (_, schemaDf, _) = eng.inspect("**/*.md")
     val emb = schemaDf.collect().find(_.getString(0) == "embedding")
     assert(emb.exists(r2 => r2.getString(1) == "FLOAT[32]" && !r2.getBoolean(2)))
+
+    // A note added after the engine cached its corpus: once index_refresh
+    // flushes a new snapshot, the same engine ranks it as a fresh engine
+    // does, and picking up the snapshot only re-joins (no ingest job).
+    Files.write(dir.resolve("w.md"), "---\ntitle: W\n---\nspark table scan".getBytes("UTF-8"))
+    assert(!ranked(eng).contains("w.md")) // not indexed yet: NULL embedding
+    ctx.indexer.start(); assert(ctx.indexer.await(60000))
+    assert(JobCount(spark)(eng.filesTable("**/*.md"))._2 == 0)
+    assert(ranked(eng) == Seq("w.md", "x.md", "y.md"))
+    assert(ranked(new QueryEngine(spark, st, Some(ctx))) == Seq("w.md", "x.md", "y.md"))
   }
 }
